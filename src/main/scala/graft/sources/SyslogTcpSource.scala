@@ -30,9 +30,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * syslog contract (`README.md:545`; its channel buffer is equally
   * volatile). For at-least-once, front the stream with Kafka (S5).
   *
-  * Scale: a single listener thread is the protocol's own bottleneck (one
-  * TCP stream); the reference's answer is many parallel sources — here,
-  * union multiple `syslog-tcp` streams, one per listener endpoint.
+  * A connection reset or any other read error fails the query with its
+  * cause; a clean end of stream (the peer closed) stops ingest quietly.
+  *
+  * Scale: each micro-batch is split into one partition per started MiB of
+  * lines, up to `defaultParallelism` ([[LineBufferMicroBatchStream]]), so
+  * a backlog is parsed and written on every core. Receiving stays one
+  * thread per TCP stream — the protocol's own bottleneck; the reference's
+  * answer is many parallel sources — here, union multiple `syslog-tcp`
+  * streams, one per listener endpoint.
   */
 class SyslogTcpSourceProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "syslog-tcp"
@@ -81,7 +87,7 @@ private[sources] class SyslogTcpMicroBatchStream(host: String, port: Int)
           append(line)
           line = in.readLine()
         }
-      } catch { case _: Throwable => () } // socket closed on stop()
+      } catch { case t: Throwable => fail(t) } // a clean EOF ends the loop
     }, s"syslog-tcp-$host:$port")
     t.setDaemon(true)
     t.start()

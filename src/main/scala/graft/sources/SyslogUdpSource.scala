@@ -74,7 +74,7 @@ private[sources] class SyslogUdpMicroBatchStream(bind: String, port: Int)
             if (l.nonEmpty) append(l)
           }
         }
-      } catch { case _: Throwable => () } // socket closed on stop()
+      } catch { case t: Throwable => fail(t) } // ignored once stop() closed it
     }, s"syslog-udp-$bind:$port")
     t.setDaemon(true)
     t.start()

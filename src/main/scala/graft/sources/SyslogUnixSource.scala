@@ -70,7 +70,7 @@ private[sources] class SyslogUnixMicroBatchStream(path: String)
           reader.setDaemon(true)
           reader.start()
         }
-      } catch { case _: Throwable => () } // channel closed on stop()
+      } catch { case t: Throwable => fail(t) } // ignored once stop() closed it
     }, s"syslog-unix-$path")
     acceptor.setDaemon(true)
     acceptor.start()
@@ -109,19 +109,22 @@ private[sources] class SyslogUnixMicroBatchStream(path: String)
     try {
       while (conn.read(buf) >= 0) {
         drain(endOfInput = false)
-        var nl = pending.indexOf("\n")
+        // one pass over every complete line, then one delete of the prefix
+        var from = 0
+        var nl = pending.indexOf("\n", from)
         while (nl >= 0) {
-          val line = pending.substring(0, nl).stripSuffix("\r")
+          val line = pending.substring(from, nl).stripSuffix("\r")
           if (line.nonEmpty) append(line)
-          pending.delete(0, nl + 1)
-          nl = pending.indexOf("\n")
+          from = nl + 1
+          nl = pending.indexOf("\n", from)
         }
+        pending.delete(0, from)
       }
       drain(endOfInput = true)
       // trailing unterminated line on close counts as a message
       val tail = pending.toString.stripSuffix("\r")
       if (tail.nonEmpty) append(tail)
-    } catch { case _: Throwable => () }
+    } catch { case t: Throwable => fail(t) }
     finally { try conn.close() catch { case _: Throwable => () } }
   }
 
