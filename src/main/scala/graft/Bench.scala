@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs the headline queries against
   * `SPARK_GRAFT_SF_DIR` (default sf0.1) and prints ONE JSON line
@@ -94,7 +94,7 @@ object Bench {
   /** Entries whose plan hash cannot be made session-independent, mapped
     * to CONSTANT markers so diff_plans.py reports them unchanged forever
     * (a churning hash on identical code is exactly the false drift
-    * signal the PLANS artifact exists to kill). Shared with [[PlanDump]]
+    * signal the PLANS artifact exists to kill). Shared with `Dev plans`
     * so a regenerated artifact agrees with a benched one.
     *
     *   - t20 pulls the KLL summary to the driver and bakes its
@@ -115,7 +115,7 @@ object Bench {
     // merges the Tables.load ts-normalization cast into the
     // grouping-expression Project; for every later query it stays a
     // separate (no-op) Project node. Reproduced minimally: a preceding
-    // `SELECT 1` flips it; SPARK_GRAFT_NO_PARSE_CSE=1 does NOT (our
+    // `SELECT 1` flips it; disabling DedupProjectParse does NOT (our
     // optimizer rule is ruled out) — a Spark-internal first-use
     // lazy-init artifact, structurally benign (node histograms differ
     // by exactly one pass-through Project). The r17 artifact happened
@@ -151,43 +151,138 @@ object Bench {
     "z01_self_checks" ->
       "SESSION_DEPENDENT(embeds t22/q33 — distinct-agg gid permutation)")
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // JVM (not ICU) case mapping: the ASCII corpus makes them identical,
-      // and ICU's CollationAwareUTF8String class-init stalls 20-110 s when
-      // the JIT queue is busy (measured; first lower()/upper() pays it)
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // plan fingerprints must be SESSION-STATE-INDEPENDENT: the default
-      // 100-char metadata truncation cuts DataFilters/ReadSchema at a
-      // RAW-character budget, so longer accumulated expression ids
-      // (#12345 vs #12) shift the "..." cut point and change the
-      // canonical hash with zero plan change (the r10 three-contexts-
-      // three-hashes q05 mystery). A large budget removes truncation;
-      // normalization then yields identical strings in any session.
-      .config("spark.sql.maxMetadataStringLength", "100000")
-      // match Verify: reference semantics drop malformed values, never raise
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  /** Evaluates every projected column of `df` through the noop sink.
+    * A `.count()` instead lets Catalyst PRUNE the projection: a
+    * map-heavy entry whose cost is its projected kernels (q125's 13
+    * interpreted variant accessors) timed 0.45 s that way while the full
+    * evaluation read 7.8 s — a 17× artifact of column pruning.
+    */
+  def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
-    // JVM/codegen warmup on the smallest SF so measured times are steady-state
-    val warmDir = "/root/testdata/sf0.001"
-    Bench.headline.foreach { n =>
+  /** JVM/codegen warm-up so measured times are steady-state: each entry
+    * once on the smallest SF, failures logged and skipped, then the
+    * warm-up's caches and garbage released.
+    */
+  def warmup(spark: SparkSession, names: Seq[String], tag: String): Unit = {
+    names.foreach { n =>
       val t0 = System.nanoTime()
-      try SparkEntry.queries(n)(spark, warmDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] warmup $n FAILED: $e") }
-      System.err.println(f"[bench] warmup $n ${(System.nanoTime() - t0) / 1e9}%.1fs")
+      try noop(SparkEntry.queries(n)(spark, "/root/testdata/sf0.001"))
+      catch { case e: Throwable => System.err.println(s"[$tag] warmup $n FAILED: $e") }
+      System.err.println(f"[$tag] warmup $n ${(System.nanoTime() - t0) / 1e9}%.1fs")
     }
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
     System.gc() // settle warmup garbage so the first measured query isn't taxed
+  }
+
+  /** One timed rep: `work`'s wall seconds, then the session's caches and
+    * garbage released whether or not `work` threw.
+    */
+  def rep(spark: SparkSession)(work: => Unit): Double = {
+    val t0 = System.nanoTime()
+    try { work; (System.nanoTime() - t0) / 1e9 }
+    finally {
+      // release any cache the operator pinned (e.g. minhash shingle
+      // sets) BLOCKING, so a previous query's resident blocks can't
+      // poison the next measurement with memory pressure
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      spark.catalog.clearCache()
+      // GC after EVERY rep, not just per query: driver garbage (collected
+      // union-find edge arrays, broadcast values) otherwise accumulates
+      // across reps and ContextCleaner — which only reclaims broadcasts /
+      // shuffle files when their handles get GC'd — never runs. Measured
+      // on d15: reps degrade 3.9→7.0→13.0 s without this, flat 3.1–3.6 s
+      // with it (r5 bench recorded the degraded 17.7 s median).
+      System.gc()
+    }
+  }
+
+  /** Seconds of each successful [[rep]] of catalog entry `name` written
+    * to [[noop]]; a failed rep is logged and dropped.
+    */
+  def timeEntry(spark: SparkSession, name: String, sfDir: String, reps: Int,
+      tag: String): Seq[Double] =
+    (1 to reps).flatMap { _ =>
+      try Some(rep(spark)(noop(SparkEntry.queries(name)(spark, sfDir))))
+      catch { case e: Throwable =>
+        System.err.println(s"[$tag] $name FAILED: $e"); None
+      }
+    }
+
+  final case class Stat(median: Double, min: Double, max: Double)
+  object Stat {
+    /** -1 everywhere when no rep succeeded. */
+    def of(times: Seq[Double]): Stat =
+      if (times.isEmpty) Stat(-1.0, -1.0, -1.0)
+      else {
+        val s = times.sorted
+        // true median: with an even count (a rep failed) average the
+        // middle two — s(n/2) alone would report the MAX of 2 survivors
+        // and turn one flaky rep into a phantom regression
+        val med =
+          if (s.length % 2 == 1) s(s.length / 2)
+          else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
+        Stat(med, s.head, s.last)
+      }
+  }
+
+  /** Per-core parse rate (BASELINE.md "≥10k parsed lines/s/core"): the
+    * full parse+cast pipeline over ONE partition, so wall time == one
+    * core's time. The corpus is the sf lines replicated `replicate`×: at
+    * sf0.1 the raw corpus parses in ~0.3 s on one core, a window where
+    * dispatch/GC jitter swings the figure 3× between same-code reps (the
+    * r9 −36% "drift") — Bench's 10 replicas stretch it to seconds
+    * without changing the rate's meaning. Returns (lines, rep seconds).
+    */
+  def parseTimes(spark: SparkSession, sfDir: String, replicate: Int,
+      reps: Int): (Long, Seq[Double]) = {
+    val lines1 = graft.queries.DataOps.logLinesFor(spark, sfDir)
+    val lines = (1 to replicate).map(_ => lines1).reduce(_ union _)
+      .coalesce(1).cache()
+    val n = lines.count()
+    val times = (1 to reps).map { _ =>
+      val t0 = System.nanoTime()
+      noop(graft.pipeline.Ingest.parse(lines, graft.queries.DataOps.ingestConfig))
+      (System.nanoTime() - t0) / 1e9
+    }
+    lines.unpersist()
+    (n, times)
+  }
+
+  /** (entry, canonical-plan md5, node histogram) per catalog entry, with
+    * the [[dataDependentPlans]] markers in place of their hashes; an entry
+    * that fails to plan reads `ERROR:<exception class>`.
+    */
+  def planRows(spark: SparkSession, sfDir: String,
+      names: Seq[String]): Seq[(String, String, Map[String, Int])] =
+    names.map { name =>
+      val (h, nodes) =
+        if (dataDependentPlans.contains(name))
+          (dataDependentPlans(name), Map.empty[String, Int])
+        else try PlanFingerprint.fingerprintNamed(SparkEntry.queries(name)(spark, sfDir), name)
+        catch { case e: Throwable =>
+          System.err.println(s"[plan] $name FAILED: $e")
+          ("ERROR:" + e.getClass.getSimpleName, Map.empty[String, Int])
+        }
+      (name, h, nodes)
+    }
+
+  /** The `PLANS_r{N}.json` format `tools/diff_plans.py` reads. */
+  def writePlans(path: String, rows: Seq[(String, String, Map[String, Int])]): Unit = {
+    val entries = rows.map { case (name, h, nodes) =>
+      val nodesJson = nodes.toSeq.sorted
+        .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+      "\"" + name + "\":{\"plan_md5\":\"" + h + "\",\"nodes\":" + nodesJson + "}"
+    }
+    java.nio.file.Files.write(java.nio.file.Paths.get(path),
+      (entries.mkString("{", ",\n", "}") + "\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = GraftSession.local("graft-bench", defaultCpus = 32)
+
+    warmup(spark, headline, "bench")
 
     // FIXED-WORK CALIBRATION PROBES (r6 verdict item 2): between r5 and r6
     // every untouched map-only query drifted +25-50% — ambient sandbox
@@ -334,8 +429,8 @@ object Bench {
     // PlanDump AT THE r10 COMMIT reproduces today's hash, not the r10
     // artifact's.
     // probe definitions live in graft.Calib — ONE implementation shared
-    // with the CalibProbe dev main, so out-of-bench re-measurements are
-    // comparable to these numbers by construction
+    // with `Dev calib`, so out-of-bench re-measurements are comparable
+    // to these numbers by construction
     val (calibCpuMs, calibSink) = Calib.cpuProbeMs()
     val calibQueryMs = Calib.queryProbeMs(spark)
     System.err.println(
@@ -347,46 +442,8 @@ object Bench {
     // from JIT/GC jitter — r4 verdict item 3). The first rep at a new
     // data size pays JIT/codegen once; the median discounts it without
     // hiding a genuinely bimodal query the way min-of-N would.
-    case class Stat(median: Double, min: Double, max: Double)
     val results: Seq[(String, Stat)] = headline.map { name =>
-      val times = (1 to 3).flatMap { _ =>
-        val t0 = System.nanoTime()
-        val ok =
-          try {
-            SparkEntry.queries(name)(spark, sfDir)
-              .write.format("noop").mode("overwrite").save()
-            true
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: $e"); false
-          }
-        val t = (System.nanoTime() - t0) / 1e9
-        // release any cache the operator pinned (e.g. minhash shingle
-        // sets) BLOCKING, so a previous query's resident blocks can't
-        // poison the next measurement with memory pressure
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-        spark.catalog.clearCache()
-        // GC after EVERY rep, not just per query: driver garbage (collected
-        // union-find edge arrays, broadcast values) otherwise accumulates
-        // across reps and ContextCleaner — which only reclaims broadcasts /
-        // shuffle files when their handles get GC'd — never runs. Measured
-        // on d15: reps degrade 3.9→7.0→13.0 s without this, flat 3.1–3.6 s
-        // with it (r5 bench recorded the degraded 17.7 s median).
-        System.gc()
-        if (ok) Some(t) else None
-      }
-      val stat =
-        if (times.isEmpty) Stat(-1.0, -1.0, -1.0)
-        else {
-          val s = times.sorted
-          // true median: with an even count (a rep failed) average the
-          // middle two — s(n/2) alone would report the MAX of 2 survivors
-          // and turn one flaky rep into a phantom regression
-          val med =
-            if (s.length % 2 == 1) s(s.length / 2)
-            else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-          Stat(med, s.head, s.last)
-        }
-      name -> stat
+      name -> Stat.of(timeEntry(spark, name, sfDir, 3, "bench"))
     }
 
     // PLAN FINGERPRINTS (r9 verdict item 3): one canonical-plan hash per
@@ -414,33 +471,16 @@ object Bench {
     // 6: a d13-style ambient drift self-adjudicates when the headline
     // entry's own median carries its plan hash — plan-same ⇒ ambient —
     // without a judge diffing plan files)
-    var fpMap: Map[String, String] = Map.empty
+    // r10 fingerprinted only the 80 bench-headline entries; a plan
+    // regression in any non-benched entry was invisible (r10 verdict
+    // What's-wrong #3). The pass now covers the FULL catalog — the
+    // fingerprint forces planning only (no execution), so the extra
+    // ~50 entries cost seconds, and the artifact becomes a complete
+    // plan-change tripwire.
+    val plans = planRows(spark, sfDir, SparkEntry.queries.keys.toSeq.sorted)
+    val fpMap = plans.map { case (name, h, _) => name -> h }.toMap
     try {
-      // r10 fingerprinted only the 80 bench-headline entries; a plan
-      // regression in any non-benched entry was invisible (r10 verdict
-      // What's-wrong #3). The pass now covers the FULL catalog — the
-      // fingerprint forces planning only (no execution), so the extra
-      // ~50 entries cost seconds, and the artifact becomes a complete
-      // plan-change tripwire.
-      val allNames = SparkEntry.queries.keys.toSeq.sorted
-      val entries = allNames.map { name =>
-        val (h, nodes) =
-          if (dataDependentPlans.contains(name))
-            (dataDependentPlans(name), Map.empty[String, Int])
-          else try PlanFingerprint.fingerprintNamed(SparkEntry.queries(name)(spark, sfDir), name)
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] plan fingerprint $name FAILED: $e")
-            ("ERROR:" + e.getClass.getSimpleName, Map.empty[String, Int])
-          }
-        fpMap += (name -> h)
-        val nodesJson = nodes.toSeq.sorted
-          .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-        "\"" + name + "\":{\"plan_md5\":\"" + h + "\",\"nodes\":" + nodesJson + "}"
-      }
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(f"PLANS_r$roundN%02d.json"),
-        (entries.mkString("{", ",\n", "}") + "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      writePlans(f"PLANS_r$roundN%02d.json", plans)
       System.err.println(f"[bench] plan fingerprints → PLANS_r$roundN%02d.json")
     } catch { case e: Throwable =>
       System.err.println(s"[bench] plan fingerprint pass FAILED: $e")
@@ -505,26 +545,9 @@ object Bench {
       System.err.println(s"[bench] stream ingest FAILED: $e"); (-1.0, -1.0)
     }
 
-    // per-core parse rate (BASELINE.md "≥10k parsed lines/s/core"): the
-    // full parse+cast pipeline over one partition — wall time == one
-    // core's time; min of 2 for steady state. The probe corpus is the
-    // sf lines REPLICATED 10×: at sf0.1 the raw corpus parses in ~0.3 s
-    // on one core, a window where dispatch/GC jitter swings the figure
-    // 3× between same-code reps (the r9 −36% "drift", adjudicated
-    // above) — the replicas stretch the window to seconds without
-    // changing the rate's meaning.
+    // min of 2 for steady state, over the 10×-replicated corpus
     val coreLps: Double = try {
-      val lines1 = graft.queries.DataOps.logLinesFor(spark, sfDir)
-      val lines = (1 to 10).map(_ => lines1).reduce(_ union _)
-        .coalesce(1).cache()
-      val n = lines.count()
-      val times = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        graft.pipeline.Ingest.parse(lines, graft.queries.DataOps.ingestConfig)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      lines.unpersist()
+      val (n, times) = parseTimes(spark, sfDir, replicate = 10, reps = 2)
       n / times.min
     } catch { case e: Throwable =>
       System.err.println(s"[bench] per-core parse FAILED: $e"); -1.0

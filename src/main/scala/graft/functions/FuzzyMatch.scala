@@ -36,8 +36,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * profile precomputes into a hash table at plan time and |A∩B| is ONE
   * codegen'd kernel call per row ([[Kernels.ngramIntersect]] — a single
   * O(len) pass over the UTF-8 bytes, no gram strings materialized; the
-  * r15 HOF composition it replaced, kept as [[gramStatHof]] for the
-  * equivalence spec, paid O(len·D) comparisons plus D filtered-array
+  * r15 HOF composition it replaced, kept in `FuzzyMatchSpec` as the
+  * equivalence reference, paid O(len·D) comparisons plus D filtered-array
   * allocations per row).
   */
 object FuzzyMatch {
@@ -74,7 +74,7 @@ object FuzzyMatch {
     * filter-count terms, O(len·D) comparisons and D filtered-array
     * allocations per row — r19 measured it at 0.8 s/rep on the q96 corpus
     * and 2× that on q118, which evaluated the profile once per statistic).
-    * [[gramStatHof]] keeps the composition as the spec's bit-equality
+    * `FuzzyMatchSpec` keeps the composition as the bit-equality
     * reference.
     */
   case class NgramIntersect(child: Expression, needle: String, n: Int)
@@ -112,29 +112,6 @@ object FuzzyMatch {
     val inter = ColumnBridge.column(
       NgramIntersect(ColumnBridge.expression(text), needle, n))
     stat(na, inter)
-  }
-
-  /** The r15 HOF composition [[gramStat]]'s kernel must match bit-for-bit
-    * (same capped multiset intersection over the same codepoint grams) —
-    * kept as the spec's equivalence reference, never on the hot path:
-    * the gram array materializes once per row as the target of a
-    * 1-element let-binding `transform` (the fence is non-deterministic by
-    * design, so CSE refuses to dedupe it), and the D capped filter-count
-    * terms reference the lambda variable.
-    */
-  private[functions] def gramStatHof(text: Column, needle: String, n: Int)
-      (stat: (Column, Column) => Column): Column = {
-    require(needle.length >= n,
-      s"needle must be at least $n chars, got '${needle}'")
-    val counts = needleGramCounts(needle, n)
-    val na = greatest(length(text) - lit(n - 1), lit(0)).cast("long")
-    element_at(transform(array(OptimizerFence(charGrams(text, n))),
-      grams => {
-        val inter = counts.map { case (g, c) =>
-          least(size(filter(grams, x => x === lit(g))), lit(c))
-        }.reduce(_ + _).cast("long")
-        stat(na, inter)
-      }), 1)
   }
 
   /** ClickHouse `ngramDistance(haystack, needle)` as one scalar Column —

@@ -201,16 +201,6 @@ object TextExprs {
       copy(left = newLeft, right = newRight)
   }
 
-  /** The interpreted composition [[ScrubTokens]] replaces — kept as the
-    * spec's equivalence reference, never on a hot path.
-    */
-  def scrubTokensRef(norm: Column, cut: Column): Column = {
-    import org.apache.spark.sql.functions._
-    array_join(filter(split(norm, " "),
-      (t, i) => !coalesce(array_contains(cut, i + 1),
-        org.apache.spark.sql.functions.lit(false))), " ")
-  }
-
   def scrubTokens(norm: Column, cut: Column): Column =
     ColumnBridge.column(ScrubTokens(ColumnBridge.expression(norm),
       ColumnBridge.expression(cut)))
@@ -268,15 +258,6 @@ object TextExprs {
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): JoinExcept =
       copy(left = newLeft, right = newRight)
-  }
-
-  /** The interpreted composition [[JoinExcept]] replaces (base = 0) —
-    * the spec's equivalence reference.
-    */
-  def joinExceptRef(arr: Column, cut: Column, sep: String): Column = {
-    import org.apache.spark.sql.functions._
-    array_join(filter(arr, (p, i) => !coalesce(array_contains(cut, i),
-      org.apache.spark.sql.functions.lit(false))), sep)
   }
 
   def joinExcept(arr: Column, cut: Column, sep: String, base: Int): Column =

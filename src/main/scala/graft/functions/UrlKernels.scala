@@ -391,8 +391,8 @@ object UrlKernels {
     * dropped, trailing path slashes collapsed ('' path → '/'), tracking
     * params removed, surviving query params sorted (UTF8String binary
     * order — `array_sort`'s StringType ordering), rejoined. Bit-identical
-    * to the r15 regex composition (kept as
-    * `TextAnalysis.canonicalizeUrlRef`, spec-pinned); line-terminator
+    * to the r15 regex composition (kept in `UrlKernelsSpec` as the
+    * reference); line-terminator
     * inputs take the exact-regex [[fallbackCanonicalize]].
     */
   def canonicalize(raw: UTF8String): UTF8String = {

@@ -405,7 +405,7 @@ object Similarity {
     when(n === 0.0, v).otherwise(transform(v, x => x / n))
   }
 
-  private def dist2(a: Column, b: Column): Column =
+  private[operators] def dist2(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), _ + _)
 
   /** ADC score of one corpus row against one query's lookup table:
@@ -419,41 +419,15 @@ object Similarity {
   private def adcScore(codes: Column, tbl: Column): Column =
     graft.functions.VectorExprs.adcSum(codes, tbl)
 
-  /** Nearest-centroid code for one subvector against one subspace's
-    * codebook literal: a fold over the k centroids carrying (best d², j).
-    * Strict `<` keeps the FIRST minimum — ties break to the lowest code,
-    * deterministically, in one pass.
-    */
-  private def argminCode(sv: Column, codebook: Vector[Array[Double]]): Column = {
-    val tbl = typedlit(codebook.map(_.toSeq))
-    aggregate(
-      sequence(lit(0), lit(codebook.length - 1)),
-      struct(lit(Double.MaxValue).as("d"), lit(0).as("j")),
-      (acc, j) => {
-        val d = dist2(sv, element_at(tbl, j + 1))
-        when(d < acc.getField("d"), struct(d.as("d"), j.cast("int").as("j")))
-          .otherwise(acc)
-      },
-      acc => acc.getField("j"))
-  }
-
   /** PQ code array (one int per subspace) for a NORMALIZED vector column
     * — the codegen'd [[graft.functions.VectorExprs.PqCodes]] kernel
-    * (tight primitive loops; the HOF composition below interprets its
-    * lambdas per element, ~m·k·subDim dispatches per vector).
+    * (tight primitive loops; the interpreted HOF composition
+    * `SimilaritySpec` pins it against pays ~m·k·subDim lambda dispatches
+    * per vector).
     */
   private def pqCodesExpr(nv: Column, model: PqModel): Column =
     graft.functions.VectorExprs.pqCodes(nv,
       model.flat, model.starts, model.counts, model.subDim)
-
-  /** The HOF composition the kernel must match bit-for-bit (same strict-<
-    * first-minimum, same sequential summation) — kept as the spec's
-    * equivalence reference, never on the hot path.
-    */
-  private[operators] def pqCodesHof(nv: Column, model: PqModel): Column =
-    array(model.codebooks.zipWithIndex.map { case (cb, s) =>
-      argminCode(slice(nv, lit(s * model.subDim + 1), lit(model.subDim)), cb)
-    }: _*)
 
   /** Train PQ codebooks (Jégou, Douze, Schmid, "Product quantization for
     * nearest neighbor search", TPAMI 2011): split each unit-normalized
@@ -466,7 +440,7 @@ object Similarity {
     *   - seed: per (subspace, hash-bucket j) the min-id subvector —
     *     deterministic spread over real data points, computed as a
     *     `min_by` aggregate (map-side combined, never a corpus window);
-    *   - assign: codes via [[argminCode]] against the current codebooks
+    *   - assign: codes via [[pqCodesExpr]] against the current codebooks
     *     as literals — strictly map-only, the corpus never shuffles;
     *   - update: per (subspace, code, dim) mean via posexplode — the
     *     exchange carries ≤ partitions × m·k·subDim pre-combined rows;

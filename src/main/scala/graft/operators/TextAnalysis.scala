@@ -247,36 +247,13 @@ object TextAnalysis {
     * r19: the normalization runs as ONE codegen'd byte-scan kernel
     * ([[graft.functions.UrlKernels.canonicalize]]) instead of the ~7
     * regex passes + split/filter/sort HOF chain; the composition lives
-    * on as [[canonicalizeUrlRef]] and `UrlKernelsSpec` pins the two
-    * bit-identical (the t28/t29 oracle still mirrors the regex
+    * on in `UrlKernelsSpec`, which pins the two bit-identical (the t28/t29 oracle still mirrors the regex
     * semantics token-for-token).
     */
   def canonicalizeUrl(url: Column): Column =
     org.apache.spark.sql.graftbridge.ColumnBridge.column(
       graft.functions.UrlKernels.CanonicalizeUrl(
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(url)))
-
-  /** The r15 regex/HOF composition [[canonicalizeUrl]]'s kernel must
-    * match bit-for-bit — the spec's equivalence reference, never on the
-    * hot path.
-    */
-  private[graft] def canonicalizeUrlRef(url: Column): Column = {
-    val noFrag = regexp_replace(trim(url), "#.*$", "")
-    val scheme = lower(regexp_extract(noFrag, "^([a-zA-Z][a-zA-Z0-9+.-]*)://", 1))
-    val rest = regexp_replace(noFrag, "^[a-zA-Z][a-zA-Z0-9+.-]*://", "")
-    val host = regexp_replace(
-      lower(regexp_extract(rest, "^([^/?]*)", 1)), ":(80|443)$", "")
-    val pathQ = regexp_replace(rest, "^[^/?]*", "")
-    val rawPath = regexp_replace(
-      regexp_extract(pathQ, "^([^?]*)", 1), "/+$", "")
-    val path = when(rawPath === "", lit("/")).otherwise(rawPath)
-    val query = regexp_extract(pathQ, "\\?(.*)$", 1)
-    val params = filter(split(query, "&"),
-      p => p =!= "" && !p.rlike(TrackingParamPattern))
-    val q = array_join(array_sort(params), "&")
-    concat(scheme, lit("://"), host, path,
-      when(q === "", lit("")).otherwise(concat(lit("?"), q)))
-  }
 
   /** Fill-in-the-middle (FIM) transformation — the infilling data prep of
     * Bavarian et al. 2022 ("Efficient Training of Language Models to Fill
@@ -348,7 +325,7 @@ object TextAnalysis {
     * document frequency (df) — the corpus-statistics pass behind tokenizer
     * training, stopword induction, and IDF tables.
     *
-    * One explode + a two-round aggregate (verified with PlanAudit): the
+    * One explode + a two-round aggregate (shown by `Dev explain`): the
     * mixed distinct/non-distinct aggregate plans Expand + partial hash
     * aggregate on (term, id) MAP-SIDE — the exploded token stream
     * compresses to per-partition (term, id) partials before anything

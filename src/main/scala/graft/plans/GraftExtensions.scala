@@ -2482,20 +2482,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     functions.foreach(ext.injectFunction)
-    if (!GraftExtensions.parseCseDisabled)
-      ext.injectOptimizerRule(_ => DedupProjectParse)
+    ext.injectOptimizerRule(_ => DedupProjectParse)
   }
 }
 
 object GraftExtensions {
-  /** Bench-adjudication switch (r16 verdict item 2): set
-    * SPARK_GRAFT_NO_PARSE_CSE=1 to run WITHOUT the [[DedupProjectParse]]
-    * rule — the A/B that rules the always-on optimizer pass in or out
-    * of a timing drift. Never set in production paths.
-    */
-  private[plans] def parseCseDisabled: Boolean =
-    sys.env.get("SPARK_GRAFT_NO_PARSE_CSE").contains("1")
-
   /** Runtime installation into an already-built session (extensions via
     * the builder only apply at session construction). The
     * [[DedupProjectParse]] optimizer rule rides the experimental hook
@@ -2508,7 +2499,7 @@ object GraftExtensions {
         .registerFunction(spark, id, inf, builder)
     }
     val cur = spark.experimental.extraOptimizations
-    if (!parseCseDisabled && !cur.contains(DedupProjectParse))
+    if (!cur.contains(DedupProjectParse))
       spark.experimental.extraOptimizations = cur :+ DedupProjectParse
   }
 }

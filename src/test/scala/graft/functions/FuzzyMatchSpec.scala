@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -107,7 +108,7 @@ class FuzzyMatchSpec extends AnyFunSuite {
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "t")
     needles.filter(_.length >= 4).foreach { needle =>
       val got = df.select(
-          FuzzyMatch.gramStatHof(col("t"), needle, 4)((_, inter) => inter).as("ref"),
+          gramStatHof(col("t"), needle, 4)((_, inter) => inter).as("ref"),
           org.apache.spark.sql.graftbridge.ColumnBridge.column(
             FuzzyMatch.NgramIntersect(
               org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("t")),
@@ -146,5 +147,25 @@ class FuzzyMatchSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](
       FuzzyMatch.ngramMatch(df, "t", "abc", 4))
     assert(e.getMessage.contains("at least 4 chars"))
+  }
+
+  /** The r15 HOF composition `FuzzyMatch.gramStat`'s kernel must match
+    * bit-for-bit (same capped multiset intersection over the same
+    * codepoint grams): the gram array materializes once per row as the
+    * target of a 1-element let-binding `transform` (the fence is
+    * non-deterministic by design, so CSE refuses to dedupe it), and the
+    * D capped filter-count terms reference the lambda variable.
+    */
+  private def gramStatHof(text: Column, needle: String, n: Int)
+      (stat: (Column, Column) => Column): Column = {
+    val counts = FuzzyMatch.needleGramCounts(needle, n)
+    val na = greatest(length(text) - lit(n - 1), lit(0)).cast("long")
+    element_at(transform(array(OptimizerFence(FuzzyMatch.charGrams(text, n))),
+      grams => {
+        val inter = counts.map { case (g, c) =>
+          least(size(filter(grams, x => x === lit(g))), lit(c))
+        }.reduce(_ + _).cast("long")
+        stat(na, inter)
+      }), 1)
   }
 }

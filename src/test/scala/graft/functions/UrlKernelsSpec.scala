@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -150,7 +151,7 @@ class UrlKernelsSpec extends AnyFunSuite {
     val df = urls.toDF("u")
     val rows = df.select(col("u"),
         graft.operators.TextAnalysis.canonicalizeUrl(col("u")).as("k"),
-        graft.operators.TextAnalysis.canonicalizeUrlRef(col("u")).as("r"))
+        canonicalizeUrlRef(col("u")).as("r"))
       .collect()
     rows.foreach { row =>
       assert(row.getString(1) == row.getString(2),
@@ -163,5 +164,26 @@ class UrlKernelsSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](
       UrlFunctions.extractURLParameter(col("u"), "a&b"))
     assert(e.getMessage.contains("[A-Za-z0-9_]+"))
+  }
+
+  /** The r15 regex/HOF composition `TextAnalysis.canonicalizeUrl`'s
+    * kernel must match bit-for-bit — the equivalence reference.
+    */
+  private def canonicalizeUrlRef(url: Column): Column = {
+    val noFrag = regexp_replace(trim(url), "#.*$", "")
+    val scheme = lower(regexp_extract(noFrag, "^([a-zA-Z][a-zA-Z0-9+.-]*)://", 1))
+    val rest = regexp_replace(noFrag, "^[a-zA-Z][a-zA-Z0-9+.-]*://", "")
+    val host = regexp_replace(
+      lower(regexp_extract(rest, "^([^/?]*)", 1)), ":(80|443)$", "")
+    val pathQ = regexp_replace(rest, "^[^/?]*", "")
+    val rawPath = regexp_replace(
+      regexp_extract(pathQ, "^([^?]*)", 1), "/+$", "")
+    val path = when(rawPath === "", lit("/")).otherwise(rawPath)
+    val query = regexp_extract(pathQ, "\\?(.*)$", 1)
+    val params = filter(split(query, "&"),
+      p => p =!= "" && !p.rlike(graft.operators.TextAnalysis.TrackingParamPattern))
+    val q = array_join(array_sort(params), "&")
+    concat(scheme, lit("://"), host, path,
+      when(q === "", lit("")).otherwise(concat(lit("?"), q)))
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -244,7 +245,7 @@ class SimilaritySpec extends AnyFunSuite {
     val nv = transform(col("embedding"),
       x => x / sqrt(aggregate(zip_with(col("embedding"), col("embedding"),
         (a, b) => a * b), lit(0.0), _ + _)))
-    val hof = rnd.select(col("vec_id"), Similarity.pqCodesHof(nv, model).as("codes"))
+    val hof = rnd.select(col("vec_id"), pqCodesHof(nv, model).as("codes"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1).toList).toMap
     assert(kernel == hof)
   }
@@ -577,5 +578,31 @@ class SimilaritySpec extends AnyFunSuite {
     assert(math.abs(recon - residual) < 1e-6 * m.totalVar,
       s"recon=$recon residual=$residual")
     assert(recon < m.totalVar, "PCA basis must explain some variance")
+  }
+
+  /** The HOF composition the PQ encode kernel must match bit-for-bit
+    * (same strict-< first-minimum, same sequential summation) — the
+    * equivalence reference.
+    */
+  private def pqCodesHof(nv: Column, model: Similarity.PqModel): Column =
+    array(model.codebooks.zipWithIndex.map { case (cb, s) =>
+      argminCode(slice(nv, lit(s * model.subDim + 1), lit(model.subDim)), cb)
+    }: _*)
+
+  /** Nearest-centroid code for one subvector against one subspace's
+    * codebook literal: a fold over the k centroids carrying (best d², j).
+    * Strict `<` keeps the FIRST minimum — ties break to the lowest code.
+    */
+  private def argminCode(sv: Column, codebook: Vector[Array[Double]]): Column = {
+    val tbl = typedlit(codebook.map(_.toSeq))
+    aggregate(
+      sequence(lit(0), lit(codebook.length - 1)),
+      struct(lit(Double.MaxValue).as("d"), lit(0).as("j")),
+      (acc, j) => {
+        val d = Similarity.dist2(sv, element_at(tbl, j + 1))
+        when(d < acc.getField("d"), struct(d.as("d"), j.cast("int").as("j")))
+          .otherwise(acc)
+      },
+      acc => acc.getField("j"))
   }
 }
